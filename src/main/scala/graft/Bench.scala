@@ -1,7 +1,34 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
+
+  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+
+  // Wall time is the graded metric, but the bench host has been measured
+  // to stall fresh page touches for 10-200 s (memory overcommit at the
+  // hypervisor: guest shows 92% idle + steal while a bench query crawls;
+  // a page-touch probe measured 1 GiB/s for the first ~4 GiB then >120 s
+  // for the next — NOTES.md "bench environment noise"). Process-CPU time
+  // is immune to those stalls, so each query reports BOTH: a query whose
+  // wall is 10x its CPU-derived floor was stalled, not badly planned.
+  // A query that throws is recorded as (-1, -1) — the same invalid marker
+  // the calibration, sync and fuzz entries use — never as its (short)
+  // time-to-failure, which would read as a speed-up in the graded total.
+  private[graft] def timeOne(spark: SparkSession, sfDir: String,
+      q: graft.queries.QueryDef): (Double, Double) = {
+    val c0 = osBean.getProcessCpuTime
+    val t0 = System.nanoTime()
+    try {
+      q.spark(spark, sfDir).count()
+      ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] ${q.name} FAILED: $e")
+      (-1.0, -1.0)
+    }
+  }
 
   /** One full measurement pass: calibrations + reference-workload sync +
     * seeded fuzz ledgers + every module's queries (with the retry-if-slow
@@ -11,9 +38,6 @@ object Bench {
     * single driver run is adjudicable under the repo's two-run rule).
     */
   private def runSuite(spark: SparkSession, sfDir: String): Seq[(String, Double, Double)] = {
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-
     // CALIBRATION entries: fixed synthetic pure-CPU work (xxhash64 over a
     // pinned range, data-independent, deterministic) through the same
     // Spark execution stack as every measured query. Two postures:
@@ -108,24 +132,11 @@ object Bench {
     // prime suspect for the q42/q33 inflation seen only under the driver's
     // contended environment). This still needs the 32g default heap from
     // build.sbt: at 8g even one module's cache GC-thrashed the run.
-    // Wall time is the graded metric, but this VM's host intermittently
-    // stalls fresh page touches for 10-200 s (memory overcommit at the
-    // hypervisor: guest shows 92% idle + steal while a bench query crawls;
-    // a page-touch probe measured 1 GiB/s for the first ~4 GiB then >120 s
-    // for the next — NOTES.md "bench environment noise"). Process-CPU time
-    // is immune to those stalls, so each query reports BOTH: a query whose
-    // wall is 10x its CPU-derived floor was stalled, not badly planned.
-    def timeOne(q: graft.queries.QueryDef): (Double, Double) = {
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      try { q.spark(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      ((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9)
-    }
     val firstPass: Seq[(String, graft.queries.QueryDef, Double, Double)] =
       SparkEntry.moduleDefs.flatMap { case (_, defs) =>
         spark.catalog.clearCache()
         defs.map { q =>
-          val (t, c) = timeOne(q)
+          val (t, c) = timeOne(spark, sfDir, q)
           System.err.println(f"[bench] ${q.name}%-32s $t%7.2f s  cpu $c%7.2f s")
           (q.name, q, t, c)
         }
@@ -142,15 +153,16 @@ object Bench {
     // above the threshold (a persistent-stall window, the r5 driver-vs-
     // builder 3x tail), so the common case costs one extra run. Bounded to
     // the 40 slowest so a fully pathological window can't double the run.
+    // A failed retry's -1 wins the min, so the entry reads as failed.
     val retryThreshold = 2.5
     val retried = scala.collection.mutable.Map[String, (Double, Double)]()
     firstPass.filter(_._3 > retryThreshold).sortBy(-_._3).take(40).foreach { case (n, q, t1, c1) =>
       spark.catalog.clearCache()
-      val (t2, c2) = timeOne(q)
+      val (t2, c2) = timeOne(spark, sfDir, q)
       var best = if (t2 < t1) (t2, c2) else (t1, c1)
       if (math.min(t1, t2) > retryThreshold) {
         spark.catalog.clearCache()
-        val (t3, c3) = timeOne(q)
+        val (t3, c3) = timeOne(spark, sfDir, q)
         if (t3 < best._1) best = (t3, c3)
       }
       System.err.println(f"[bench] retry ${n}%-26s first $t1%7.2f s -> ${best._1}%7.2f s")
@@ -178,7 +190,9 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(path),
         (content + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] detail write to $path FAILED: $e")
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -207,17 +221,9 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_PAIR").exists(v => v == "1" || v == "true")
     val mediansPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_MEDIANS", "BENCH_MEDIANS.json")
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // in-process chmod for local writes (no libhadoop here — the stock
-      // LocalFileSystem forks one `chmod` per created file/dir; r18 JFR
-      // counted 1,557 forks in two q215 runs). Same bytes, same perms.
-      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup so the first measured query isn't charged ~3s of

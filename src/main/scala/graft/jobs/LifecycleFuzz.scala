@@ -62,13 +62,15 @@ private[graft] object LifecycleFuzz {
 
   /** Standalone soak entry point: `runMain graft.jobs.LifecycleFuzz
     * [seed] [trials]` — the end-of-round fresh-seed campaign without a
-    * test harness (defaults: random seed, 8 trials).
+    * test harness (defaults: random seed, 8 trials; `SPARK_GRAFT_CPUS`
+    * cores, default all).
     */
   def main(args: Array[String]): Unit = {
     val seed = args.lift(0).map(_.toLong).getOrElse(new java.util.Random().nextLong())
     val trials = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = graft.GraftSession.builder(cpus).master(s"local[$cpus]")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

@@ -144,10 +144,11 @@ object SyncJob {
     * the exact `< watermark` comparison stays micro-precise in the plan.
     *
     * Past ~10M tokens the planner consume itself becomes the driver's
-    * bottleneck (the per-token map at load() is ~2.1 GB there, LiveProbe
-    * §7). The source's `censusRanges` option is the escape hatch — the
-    * planner records one byte range per group (O(groups) state, LiveProbe
-    * §10) and tasks read their own slices — but it requires the staged
+    * bottleneck (the per-token map at load() is ~2.1 GB there, NOTES.md
+    * "r14 Next #6"). The source's `censusRanges` option is the escape
+    * hatch — the planner records one byte range per group (O(groups)
+    * state, same NOTES.md entry) and tasks read their own slices — but
+    * it requires the staged
     * files to OUTLIVE execution, which this method's delete-at-load()
     * cadence deliberately does not provide: at that scale use
     * [[runLiveRanged]], which stages into a CALLER-OWNED directory and
@@ -357,9 +358,9 @@ object SyncJob {
 
   /** The MEGA-FLEET form of [[runLive]]: past ~10M tokens the planner's
     * load()-time consume is the driver's own bottleneck (the per-token
-    * map is ~2.1 GB there, LiveProbe §7), so this variant reads through
-    * `censusRanges` — the planner records one byte range per group
-    * (O(groups) driver state, LiveProbe §10) and each TASK reads its own
+    * map is ~2.1 GB there, NOTES.md "r14 Next #6"), so this variant
+    * reads through `censusRanges` — the planner records one byte range
+    * per group (O(groups) driver state, same entry) and each TASK reads its own
     * slice of the staged files. That flips the staging lifetime:
     * [[runLive]] deletes at load() because the planner consumed
     * everything; here tasks read the files DURING the action, so they

@@ -144,8 +144,9 @@ case class RangeMergeJoinExec(
     // Primitive fast path: when key and both times bind to plain long
     // columns (the common case — keys and unix_micros timestamps), read
     // them with getLong instead of boxing through Expression.eval +
-    // interpreted ordering. Measured ~2× on the many-keys direction of
-    // tools/RangeJoinScaleProbe, where per-row overhead, not candidate
+    // interpreted ordering. Measured ~2× on the many-keys direction
+    // (NOTES.md "Range-join family: measured crossover"), where per-row
+    // overhead, not candidate
     // volume, dominates.
     def longRef(e: Expression): Int = e match {
       case b: BoundReference if b.dataType == LongType => b.ordinal

@@ -1855,7 +1855,7 @@ object LiveQueries {
 
     // ── O(groups) RANGED census planning (r15): at 10M tokens the
     //    materialized census + watermark map costs the DRIVER ~2.1 GB at
-    //    load() (LiveProbe §7 — the reference's own loop state). With
+    //    load() (NOTES.md "r14 Next #6" — the reference's own loop state). With
     //    `censusRanges=G` the planner streams the SORTED staged files
     //    once and records one BYTE RANGE per group — O(groups) driver
     //    state — and each task reads its own slice before driving the

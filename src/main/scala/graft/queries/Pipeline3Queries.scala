@@ -27,7 +27,7 @@ object Pipeline3Queries {
     * neighbor search once). Brute-force exact here — the declared scale
     * path swaps this stage for q62's LSH candidate generation; the graph
     * algebra downstream is identical either way. That swap is MEASURED in
-    * `tools/GraphScaleProbe` (NOTES.md round-6 tables): on planted-cluster
+    * NOTES.md "Round 6: graph-tier scale story, measured": on planted-cluster
     * corpora the LSH graph preserves LPA community purity to within 0.002
     * (σ=0.5) at ~1% of the all-pairs candidate volume; on the driver's
     * isotropic synthetic embeddings no sublinear method can keep recall,
@@ -324,8 +324,8 @@ object Pipeline3Queries {
     // ── q140's declared scale path, GREEN: the same 3-round LPA community
     //    readout, but the 3-NN graph comes from LSH banding candidates
     //    (equi-join on (band, key) — never all-pairs) instead of the exact
-    //    brute tier. This is the swap `tools/GraphScaleProbe` measures
-    //    (NOTES.md: purity within 0.002 of exact on clustered corpora at
+    //    brute tier. This is the swap NOTES.md "Round 6: graph-tier scale
+    //    story, measured" records (purity within 0.002 of exact on clustered corpora at
     //    ~1% candidate volume); declaring it oracle-checked closes the
     //    "asserted, not measured" gap from the r5 verdict. The oracle
     //    inlines the identical ±1 Rademacher plane weights

@@ -174,7 +174,7 @@ object ShardedQueries {
         // pairs over 8 shards), so gate-scale marks need a toy granularity
         // to exist at all; production default 8192 assumes millions of
         // rows per part. The <10%-parsed bound is pinned at realistic
-        // density by GranuleIndexSpec + tools/GranuleProbe.
+        // density by GranuleIndexSpec (measured: NOTES.md "Round 10: ledger").
         graft.jobs.StoreOptimize.optimize(s, dir.getAbsolutePath,
           codec = "zstd", finalDedup = true, granuleRows = 64)
         new java.io.FileOutputStream(new File(dir, "_OPTIMIZED")).close()
@@ -576,7 +576,7 @@ object ShardedQueries {
     //    declared over the r8 newline-count seam: a pushed global
     //    CountStar with no row predicates needs no FIELDS, so each
     //    partition counts non-empty lines straight off 64 KB blocks (no
-    //    parse, no InternalRow per row — CountPathProbe: 2.6× over the
+    //    parse, no InternalRow per row — NOTES.md "Round 8: ledger" #12: 2.6× over the
     //    parsed path at 483 MB, identical counts) and ships exactly one
     //    row into the retained final sum. ClickHouse answers count() from
     //    part metadata; a text store's floor is one newline scan, and

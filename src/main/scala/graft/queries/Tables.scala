@@ -16,7 +16,7 @@ object Tables {
       // TIMESTAMP(NANOS) (int64 ns — which Spark's µs TimestampType cannot
       // represent directly) vs TIMESTAMP(MICROS) without timezone (read as
       // TIMESTAMP_NTZ). Normalize both to TimestampType: the session
-      // timezone is pinned UTC everywhere (GraftSession/Verify/Bench), so
+      // timezone is pinned UTC by GraftSession.builder, which every session uses, so
       // NTZ→timestamp is instant-preserving and matches DuckDB's naive
       // TIMESTAMP semantics. For nanos, integer `div`, not `/`: ~1.7e18 ns
       // exceeds the 2^53 exact-double range.

@@ -1716,8 +1716,9 @@ class ShardedAggReader(partition: InputPartition, pa: ShardPushedAgg,
   private val aggIdx = pa.aggs.map(a => if (a.op == "count_star") -1 else base.fieldIndex(a.column))
   private var skippedFinal = 0L
 
-  // measurement-only escape hatches for tools/AggPathProbe + CountPathProbe
-  // (compare paths head-to-head); production always takes the fastest
+  // the graft.sharded.{countFastPath,sortedAggPath,aggFastPath} switches
+  // select the reference path that ShardedSourceSpec and OrderedScanSpec
+  // compare the fast paths against; production always takes the fastest
   // eligible path
   private lazy val resultIter: Iterator[InternalRow] =
     if (countOnlyEligible

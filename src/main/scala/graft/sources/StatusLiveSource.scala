@@ -638,7 +638,7 @@ object StatusLiveSource {
 
 /** The O(groups) mega-fleet census form (`censusRanges` option): instead
   * of materializing a 10M-token census + watermark map on the driver at
-  * load() (~2.1 GB at 10M tokens, LiveProbe §7 — the reference's own
+  * load() (~2.1 GB at 10M tokens, NOTES.md "r14 Next #6" — the reference's own
   * loop state, sync.go:61-100 [ext]), the planner streams the SORTED
   * staged files once, records one byte range per group, and each task
   * reads ITS slice — driver state O(groups). The trade is the file

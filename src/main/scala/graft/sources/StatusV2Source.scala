@@ -387,8 +387,9 @@ private[sources] object ByteRangeLines {
 private[graft] class ByteRangeLines(path: String, start: Long, end: Long,
     exact: Boolean = false) extends LineSource {
   // Chunk-buffered scan, not byte-at-a-time read(): one virtual call per
-  // 64 KB block instead of one per BYTE (the r8 SplitScanProbe profile
-  // showed the per-byte BufferedInputStream.read() dominating the whole
+  // 64 KB block instead of one per BYTE (the r8 profile in NOTES.md
+  // "Round 8: the line-reader was the bottleneck, not the parse" showed
+  // the per-byte BufferedInputStream.read() dominating the whole
   // raw-scan path). The common case — a line entirely inside the current
   // block — is a single memchr-style scan plus one copyOfRange.
   //

@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-entry bench adjudicator: times the named entries in isolation
-  * under the EXACT `graft.Bench` session posture (local[N], AQE, 32
-  * shuffle partitions, warmed session), N iterations with a
+  * under the EXACT `graft.Bench` session posture (`GraftSession.builder`
+  * at local[N], warmed session), N iterations with a
   * module-fresh cache per iteration, reporting wall + process-CPU per
   * run plus the min/median. This is the "profile it once on a provably
   * idle host" tool for adjudicating entries the driver's contended runs
@@ -21,14 +19,9 @@ object BenchOne {
     val iters = args.lift(1).map(_.toInt).getOrElse(6)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder(cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/region.parquet").count()

@@ -1,15 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Replicates the driver's round-start smoke check: SparkEntry.entry must
   * return >0 rows on sf0.001. Run: `sbt "runMain graft.tools.EntrySmoke"`.
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder(4)
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -111,7 +111,7 @@ class SimilaritySpec extends SparkTestBase {
     // use), so recall is an exact number, not a distribution. These floors
     // are the regression tripwire: a parameter or algorithm change that
     // silently craters recall fails here, not in production. Measured by
-    // tools/RecallProbe on sf0.001: IVF 37/40, PQ 10/40, LSH 1/40 (LSH at
+    // on sf0.001 (NOTES.md "Round 4: new surfaces"): IVF 37/40, PQ 10/40, LSH 1/40 (LSH at
     // 64 hyperplane bits is the training-free low-recall tier by design —
     // the floor documents that honestly rather than hiding it).
     val corpus = Similarity.prepare(emb, "vec_id", "embedding")

@@ -8,7 +8,7 @@ import graft.sources.{RangedCensus, StatusLiveRangedPartition, StatusLiveSource}
 /** The O(groups) RANGED census plan (`censusRanges` option) — the
   * mega-fleet escape hatch: instead of materializing a per-token
   * census + watermark map on the driver at load() (~2.1 GB at 10M
-  * tokens, LiveProbe §7), the planner streams the SORTED staged files
+  * tokens, NOTES.md "r14 Next #6"), the planner streams the SORTED staged files
   * once and records one BYTE RANGE per group; each task reads its own
   * slice and drives the same per-subject page loops. Pins:
   *
