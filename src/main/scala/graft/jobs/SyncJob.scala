@@ -55,8 +55,10 @@ object SyncOptions {
   * into: resolve token scope → per-token watermarks from the sink → one
   * bounded, pruned source scan → columnar signal explosion → append.
   *
-  * Shuffle profile at scale: the only wide operation is the watermark
-  * aggregate over the sink (keyed by tokenId, low cardinality); both joins
+  * Shuffle profile at scale: the only wide operation is the per-token
+  * aggregate over the sink (keyed by tokenId, low cardinality; the live
+  * entries compute it ONCE per round and every sink consumer — census,
+  * wire stops, the `< watermark` join — reads that result); both joins
   * (dim, watermark) broadcast. Scan→explode→write is narrow, so the job
   * scales linearly with source bytes on any executor count.
   */
@@ -67,9 +69,10 @@ object SyncJob {
       dim: DataFrame,
       existingSink: Option[DataFrame],
       opts: SyncOptions = SyncOptions(),
-      // live callers that already computed the per-token watermark table
-      // (for wire-window staging) pass it here so the sink is scanned ONCE
-      // per round instead of once per consumer (r18, guide §2.4/§5)
+      // live callers that already computed the per-token table
+      // ([[SyncOps.perTokenState]]: every sink token, its watermark) pass
+      // it here; with a sink it is then both the token census and the
+      // watermark join, so run() reads the sink not at all (guide §2.4/§5)
       precomputedWatermarks: Option[DataFrame] = None
   ): DataFrame = {
     val stop = opts.stop.getOrElse(Timestamp.from(Instant.now()))
@@ -79,14 +82,8 @@ object SyncJob {
     val defs = SignalDefinitions.resolve(opts.signalNames)
 
     // Token scope: explicit list, else DISTINCT from the sink (sync.go:61,211-234).
-    val explicitTokens = SyncOps.parseTokenList(opts.tokens)
-    val scopedDim =
-      if (explicitTokens.nonEmpty) dim.where(col("tokenId").isin(explicitTokens: _*))
-      else
-        existingSink match {
-          case Some(sink) => dim.join(SyncOps.tokensFromSink(sink), Seq("tokenId"), "left_semi")
-          case None       => dim.limit(0) // no tokens, no sink ⇒ nothing to sync
-        }
+    val scopedDim = SyncOps.scopeDim(dim, SyncOps.parseTokenList(opts.tokens),
+      existingSink.map(sk => precomputedWatermarks.getOrElse(SyncOps.tokensFromSink(sk))))
 
     val bounded = docs.where(SyncOps.timeBound(col("time"), start, stop))
 
@@ -106,15 +103,6 @@ object SyncJob {
       .select("tokenId", "timestamp", "name", "valueNumber", "valueString", "source")
   }
 
-  /** [[run]] plus an [[org.apache.spark.sql.Observation]] carrying the
-    * batch conversion stats the reference logs per page (`sync.go:97-107`:
-    * rows synced, tokens touched, time bounds): `signal_rows`,
-    * `distinct_tokens` (approx — observe() aggregates must be
-    * merge-friendly), `min_ts`/`max_ts`. The stats ride the SAME job as
-    * the data (one pass, zero extra actions) and become available after
-    * the caller's first action; pipe them into
-    * [[GraftMetricsListener.inc]] for the scrape-able surface.
-    */
   /** [[run]] with the documents read LIVE, so the incremental resume
     * pushes INTO the `_search` request bodies: the token census becomes
     * the pushed subject IN-set (one page loop per subject, grouped into
@@ -142,6 +130,14 @@ object SyncJob {
     * which also absorbs the precision gap: the wire window stops at
     * ceil(watermark) in millis (a superset — ES ranges are epoch-millis),
     * the exact `< watermark` comparison stays micro-precise in the plan.
+    *
+    * The sink is read ONCE per round: one pushed per-token aggregate
+    * ([[SyncOps.perTokenState]], `(tokenId, watermark)`) feeds the token
+    * census and mode probe, the census and stops staging (or the inline
+    * stops), and [[run]]'s scope and `< watermark` join. With the census
+    * taken from the sink that table has several consumers and is
+    * checkpointed eagerly (one job); with explicit `TOKEN_IDS` it stays a
+    * lazy checkpoint that materializes inside the stops action.
     *
     * Past ~10M tokens the planner consume itself becomes the driver's
     * bottleneck (the per-token map at load() is ~2.1 GB there, NOTES.md
@@ -172,13 +168,16 @@ object SyncJob {
       hotSubjectPages: Int = 8
   ): DataFrame = {
     val explicitTokens = SyncOps.parseTokenList(opts.tokens)
-    val scopedDim =
-      if (explicitTokens.nonEmpty) dim.where(col("tokenId").isin(explicitTokens: _*))
-      else
-        existingSink match {
-          case Some(sink) => dim.join(SyncOps.tokensFromSink(sink), Seq("tokenId"), "left_semi")
-          case None       => dim.limit(0)
-        }
+    val wmNames =
+      if (opts.signalNames.isEmpty) Nil
+      else SignalDefinitions.resolve(opts.signalNames).map(_.vssName)
+    // ONE sink read per round (guide §2.4): eager when the census comes
+    // from the sink (probe, both staging jobs and the append read it, and
+    // the overlapped staging jobs must not each materialize it); lazy with
+    // explicit tokens, materialized inside the stops action
+    val perToken: Option[DataFrame] = existingSink.map(sk =>
+      SyncOps.perTokenState(sk, wmNames).localCheckpoint(explicitTokens.isEmpty))
+    val scopedDim = SyncOps.scopeDim(dim, explicitTokens, perToken)
     val subjectsDf = scopedDim.select("subject").distinct()
     // mode probe WITHOUT a fleet-sized collect: fetch at most threshold+1
     // subjects — enough to decide, and already the full census when small.
@@ -191,23 +190,7 @@ object SyncJob {
       else subjectsDf.limit(pathModeThreshold + 1).collect().map(_.getString(0)).toSeq
     val pathMode =
       explicitTokens.length > pathModeThreshold || probe.length > pathModeThreshold
-    val wmNames =
-      if (opts.signalNames.isEmpty) Nil
-      else SignalDefinitions.resolve(opts.signalNames).map(_.vssName)
-    // ONE watermark aggregate per round, shared by the wire-window staging
-    // AND run()'s exact `< watermark` join (r18, guide §2.4): the lazy
-    // localCheckpoint materializes at the staging write's action and the
-    // append's plan reuses the tiny per-token table instead of re-scanning
-    // the whole sink a second time.
-    val wmShared: Option[DataFrame] =
-      existingSink.map(sk => SyncOps.watermarks(sk, wmNames).localCheckpoint(false))
-    // LEFT from the scoped dim so a never-synced token SURVIVES the join
-    // with a null watermark — the per-subject stop aggregation must SEE
-    // it to withhold the subject's stop line (a stop derived from a
-    // synced sibling alone would silently drop the sinkless token's
-    // rows at/after it)
-    def watermarksDf = scopedDim.select("tokenId", "subject")
-      .join(wmShared.get, Seq("tokenId"), "left_outer")
+    def stops = SyncOps.stopsBySubject(scopedDim, perToken.get)
     var reader = spark.read.format("graft-status-live")
       .option("url", url).option("index", index).option("batchSize", batchSize.toString)
       .option("slices", slices.toString)
@@ -255,24 +238,10 @@ object SyncJob {
             () => stageText(subjectsDf, "graft-subjects"))
           censusInFlight = Some(censusStaged)
           if (existingSink.isDefined) {
-            // watermark map as subject<TAB>ceil-millis lines, computed and
-            // written by the CLUSTER (the exclusive per-token stop,
-            // sync.go:96-100 [ext]; ceil absorbs the micro→milli gap, the
-            // plan's exact `< watermark` filter stays micro-precise).
-            // MAX per subject, and ONLY for subjects whose EVERY token
-            // has a watermark: a dim mapping several tokenIds to one
-            // subject must stage ONE stop line, the backfill's
-            // `time < watermark` fetch needs the union of every token's
-            // window (overshipped overlap is clipped by run()'s
-            // per-token watermark join; undershipping must not happen),
-            // and a never-synced alias needs the FULL window — a stop
-            // derived from its sibling would silently drop its rows
-            val f = stageText(watermarksDf
-              .groupBy(col("subject"))
-              .agg(max(expr("(unix_micros(watermark) + 999) DIV 1000")).as("ms"),
-                sum(when(col("watermark").isNull, 1).otherwise(0)).as("missing"))
-              .where(col("missing") === 0)
-              .select(concat_ws("\t", col("subject"), col("ms")).as("value")),
+            // the stops as subject<TAB>ceil-millis lines, computed and
+            // written by the CLUSTER
+            val f = stageText(
+              stops.select(concat_ws("\t", col("subject"), col("ms")).as("value")),
               "graft-stops")
             reader = reader.option("stopBySubjectPath", f)
           }
@@ -281,22 +250,11 @@ object SyncJob {
           reader.option("subjectsPath", censusStaged.join()).load()
         } else {
           if (existingSink.isDefined) {
-            // max per subject for the same reason the staged form
-            // aggregates — and only when every token has a watermark: a
-            // multi-token subject's backfill window is the union of its
-            // tokens' `< watermark` needs (a plain toMap would keep an
-            // arbitrary token's and undership), and a sinkless alias
-            // needs the full window (no stop at all)
-            val stops: Map[String, Long] = watermarksDf
-              .groupBy(col("subject"))
-              .agg(max(expr("(unix_micros(watermark) + 999) DIV 1000")).as("ms"),
-                sum(when(col("watermark").isNull, 1).otherwise(0)).as("missing"))
-              .where(col("missing") === 0)
-              .select("subject", "ms").collect()
-              .map(r => r.getString(0) -> r.getLong(1)).toMap
-            if (stops.nonEmpty)
+            val inline: Map[String, Long] =
+              stops.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+            if (inline.nonEmpty)
               reader = reader.option("stopBySubject",
-                graft.sources.StatusLiveSource.stopsJson(stops))
+                graft.sources.StatusLiveSource.stopsJson(inline))
           }
           reader.load().where(col("subject").isin(probe.sorted: _*))
         }
@@ -305,7 +263,7 @@ object SyncJob {
         staged.forEach(p => deleteStaged(p))
       }
     val docs = base.select(col("subject"), col("source"), col("time"), col("data"))
-    run(docs, dim, existingSink, opts, wmShared)
+    run(docs, dim, existingSink, opts, perToken)
   }
 
   /** Token count above which [[runLive]] stages the census and watermark
@@ -417,13 +375,6 @@ object SyncJob {
       weightBySinkDepth: Boolean = false
   ): DataFrame = {
     val explicitTokens = SyncOps.parseTokenList(opts.tokens)
-    val scopedDim =
-      if (explicitTokens.nonEmpty) dim.where(col("tokenId").isin(explicitTokens: _*))
-      else
-        existingSink match {
-          case Some(sink) => dim.join(SyncOps.tokensFromSink(sink), Seq("tokenId"), "left_semi")
-          case None       => dim.limit(0)
-        }
     val wmNames =
       if (opts.signalNames.isEmpty) Nil
       else SignalDefinitions.resolve(opts.signalNames).map(_.vssName)
@@ -438,62 +389,44 @@ object SyncJob {
       .option("slices", slices.toString)
     if (opts.signalNames.nonEmpty)
       reader = reader.option("signals", opts.signalNames.mkString(","))
-    // Both staged tables RE-AGGREGATE BY SUBJECT after the dim join: the
+    // Every staged table RE-AGGREGATES BY SUBJECT after the dim join: the
     // census stages distinct subjects, so a dim mapping several tokenIds
     // to one subject (aliases, re-registrations) must stage ONE line per
     // subject here too — per-token lines would duplicate the subject and
-    // the planner's strict-sorted require would fail the sync. The
-    // backfill fetches `time < watermark` (the token's OLDEST synced
-    // signal), so the subject's wire stop is the MAX over its tokens —
-    // the union of every token's need: the token with the newer
-    // watermark must not be undershipped, and the overlap the other
-    // token re-receives is clipped exactly by [[run]]'s per-token
-    // watermark join. A subject gets a stop line ONLY when EVERY one of
-    // its tokens has a watermark (LEFT join from the scoped dim + null
-    // guard): a never-synced alias must fetch the FULL window — a stop
-    // derived from its sibling's watermark would silently drop every
-    // doc at/after it for the sinkless token, rows nothing downstream
-    // can recover. Weights SUM (the subject's total sink depth is what
-    // its tile drains; a sinkless sibling just contributes 0 —
-    // balance-only).
+    // the planner's strict-sorted require would fail the sync. Stops take
+    // the MAX over a subject's tokens and are withheld while any token is
+    // sinkless ([[SyncOps.stopsBySubject]]); weights SUM (the subject's
+    // total sink depth is what its tile drains; a sinkless sibling just
+    // contributes 0 — balance-only).
     // ONE aggregate pass over the sink feeds every consumer this method
-    // has (r18, guide §2.4/§1.2): per-token watermark (the stops file +
-    // run()'s exact `< watermark` join), per-token depth (the weights
-    // file), and whale discovery all read the SAME tiny lazily-checkpointed
-    // table instead of each re-scanning the whole sink. min(when(...))
-    // yields a NULL watermark where the filtered form yielded an absent
-    // row — identical through the left-outer joins and the null guards.
-    // ≥2 sink consumers (stops + weights and/or whale discovery) ⇒ the
-    // shared per-token table is checkpointed EAGERLY — one scheduled job,
-    // overlapped with the census write below — so its consumers can then
-    // run CONCURRENTLY instead of serializing on the first one's lazy
-    // materialization (r19, guide §2.6; the r18 residual measured
-    // ~0.2-0.4 s of sequential small jobs per round on q240/q243). With
-    // a single consumer (stops only) the lazy form stays: materialization
-    // folds into the stops write's own action, one job total.
-    val fanOutConsumers = existingSink.isDefined && (weightBySinkDepth || hotMinRows >= 0L)
-    // the census write only reads the dim — submitted FIRST so it
-    // overlaps the per-token sink aggregate and the staging jobs below
-    // (guide §2.6), joined where the option is set; settled in the
-    // finally so a staging failure cannot leave the write racing the
-    // caller's directory cleanup
-    val censusStaged = java.util.concurrent.CompletableFuture.supplyAsync(
-      () => stageTo(scopedDim.select("subject").distinct(), "census"))
-    val perToken: Option[DataFrame] = existingSink.map { sk =>
-      val wmExpr =
-        if (wmNames.isEmpty) min(col("timestamp"))
-        else min(when(col("name").isin(wmNames: _*), col("timestamp")))
-      sk.groupBy(col("tokenId"))
-        .agg(wmExpr.as("watermark"), count(lit(1)).as("n"))
-        .localCheckpoint(fanOutConsumers)
-    }
-    val wmShared = perToken.map(_.select("tokenId", "watermark"))
-    def stageStops(): String = stageTo(scopedDim.select("tokenId", "subject")
-      .join(wmShared.get, Seq("tokenId"), "left_outer")
-      .groupBy(col("subject"))
-      .agg(max(expr("(unix_micros(watermark) + 999) DIV 1000")).as("ms"),
-        sum(when(col("watermark").isNull, 1).otherwise(0)).as("missing"))
-      .where(col("missing") === 0)
+    // has (r18, guide §2.4/§1.2): the census when it comes from the sink,
+    // per-token watermark (the stops file + run()'s exact `< watermark`
+    // join), per-token depth (the weights file), and whale discovery all
+    // read the SAME tiny checkpointed [[SyncOps.perTokenState]] table
+    // instead of each re-scanning the whole sink.
+    // ≥2 sink consumers (stops + census, weights and/or whale discovery)
+    // ⇒ checkpointed EAGERLY — one scheduled job — so the consumers run
+    // CONCURRENTLY instead of serializing on the first one's lazy
+    // materialization (r19, guide §2.6; the r18 residual measured ~0.2-0.4
+    // s of sequential small jobs per round on q240/q243). Stops only ⇒
+    // lazy: materialization folds into the stops write, one job.
+    val censusFromSink = explicitTokens.isEmpty && existingSink.isDefined
+    val fanOutConsumers = censusFromSink ||
+      existingSink.isDefined && (weightBySinkDepth || hotMinRows >= 0L)
+    def stageCensus(scope: DataFrame) = java.util.concurrent.CompletableFuture.supplyAsync(
+      () => stageTo(scope.select("subject").distinct(), "census"))
+    // a census that only reads the dim is submitted FIRST so it overlaps
+    // the per-token sink aggregate and the staging jobs below (guide
+    // §2.6), joined where the option is set; settled in the finally so a
+    // staging failure cannot leave the write racing the caller's
+    // directory cleanup
+    val dimCensus =
+      if (censusFromSink) None else Some(stageCensus(SyncOps.scopeDim(dim, explicitTokens, None)))
+    val perToken: Option[DataFrame] = existingSink.map(sk =>
+      SyncOps.perTokenState(sk, wmNames, withCount = true).localCheckpoint(fanOutConsumers))
+    val scopedDim = SyncOps.scopeDim(dim, explicitTokens, perToken)
+    val censusStaged = dimCensus.getOrElse(stageCensus(scopedDim))
+    def stageStops(): String = stageTo(SyncOps.stopsBySubject(scopedDim, perToken.get)
       .select(concat_ws("\t", col("subject"), col("ms")).as("value")), "stops")
     // per-token sink depth as subject<TAB>rows, computed and sorted BY
     // THE CLUSTER like the stops file — the driver never holds a
@@ -557,9 +490,18 @@ object SyncJob {
       reader = reader.option("hotSubjectsPath", hf)
     }
     val docs = reader.load().select(col("subject"), col("source"), col("time"), col("data"))
-    run(docs, dim, existingSink, opts, wmShared)
+    run(docs, dim, existingSink, opts, perToken.map(_.select("tokenId", "watermark")))
   }
 
+  /** [[run]] plus an [[org.apache.spark.sql.Observation]] carrying the
+    * batch conversion stats the reference logs per page (`sync.go:97-107`:
+    * rows synced, tokens touched, time bounds): `signal_rows`,
+    * `distinct_tokens` (approx — observe() aggregates must be
+    * merge-friendly), `min_ts`/`max_ts`. The stats ride the SAME job as
+    * the data (one pass, zero extra actions) and become available after
+    * the caller's first action; pipe them into
+    * [[GraftMetricsListener.inc]] for the scrape-able surface.
+    */
   def runObserved(
       docs: DataFrame,
       dim: DataFrame,

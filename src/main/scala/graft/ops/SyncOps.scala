@@ -40,6 +40,61 @@ object SyncOps {
     base.groupBy(col("tokenId")).agg(min(col("timestamp")).as("watermark"))
   }
 
+  /** The ONE per-token read of the sink a live resume round makes: every
+    * token the sink holds (the census, [[tokensFromSink]]) with its
+    * [[watermarks]] value, plus its row count `n` when `withCount`. A token
+    * with none of the `names` signals keeps its row with a NULL watermark,
+    * so it stays in the census and fetches its full window. Pushable on
+    * `graft-signal-live` either way: with `names` set the sink aggregates
+    * `GROUP BY tokenId, name` (only column arguments reach the store) and
+    * the per-name minima fold per token in Spark — a single
+    * `min(when(name IN …))` would ship every raw row instead.
+    */
+  def perTokenState(sink: DataFrame, names: Seq[String] = Nil,
+      withCount: Boolean = false): DataFrame = {
+    val keys = col("tokenId") +: (if (names.isEmpty) Nil else Seq(col("name")))
+    val partial = sink.groupBy(keys: _*)
+      .agg(min(col("timestamp")).as("watermark"), count(lit(1)).as("n"))
+    val state =
+      if (names.isEmpty) partial
+      else partial.groupBy(col("tokenId")).agg(
+        min(when(col("name").isin(names: _*), col("watermark"))).as("watermark"),
+        sum(col("n")).as("n"))
+    if (withCount) state else state.drop("n")
+  }
+
+  /** Token scope of a sync: the explicit list when given, else the tokens
+    * of `census` (a per-token table of the sink), else none (no tokens, no
+    * sink ⇒ nothing to sync; reference `sync.go:61,211-234`).
+    */
+  def scopeDim(dim: DataFrame, explicitTokens: Seq[Long], census: Option[DataFrame]): DataFrame =
+    if (explicitTokens.nonEmpty) dim.where(col("tokenId").isin(explicitTokens: _*))
+    else census match {
+      case Some(c) => dim.join(c.select("tokenId"), Seq("tokenId"), "left_semi")
+      case None    => dim.limit(0)
+    }
+
+  /** Per-subject wire stop `(subject, ms)` for the live read: the exclusive
+    * per-token stop (sync.go:96-100 [ext]) in ceil-millis (a superset of
+    * the micro-precise `< watermark` join that still runs in the plan).
+    * MAX over the subject's tokens — a dim mapping several tokenIds to one
+    * subject must fetch the union of every token's `< watermark` window
+    * (the overlap is clipped by the per-token join; undershipping must not
+    * happen) — and ONLY for subjects whose EVERY scoped token has a
+    * watermark: a never-synced alias needs the FULL window, and a stop
+    * derived from its sibling would silently drop its rows. `wm` holds
+    * `tokenId`/`watermark` rows; a missing row and a NULL watermark both
+    * count as never synced.
+    */
+  def stopsBySubject(scopedDim: DataFrame, wm: DataFrame): DataFrame =
+    scopedDim.select("tokenId", "subject")
+      .join(wm.select("tokenId", "watermark"), Seq("tokenId"), "left_outer")
+      .groupBy(col("subject"))
+      .agg(max(expr("(unix_micros(watermark) + 999) DIV 1000")).as("ms"),
+        sum(when(col("watermark").isNull, 1).otherwise(0)).as("missing"))
+      .where(col("missing") === 0)
+      .select("subject", "ms")
+
   /** The bounded-scan predicate: half-open `[start, stop)` interval
     * (inclusive start, exclusive stop — reference Gte/Lt,
     * `elastic.go:47-48,54`; the tests' +500ms arithmetic depends on it,
@@ -82,7 +137,7 @@ object SyncOps {
 
   /** [[hotSubjectsFromSink]] over an ALREADY-AGGREGATED per-token count
     * table (`tokenId`, `n`) — callers that computed the counts for another
-    * purpose (e.g. [[graft.jobs.SyncJob.runLiveRanged]]'s weight staging)
+    * purpose (e.g. [[graft.jobs.SyncJob.runLiveRanged]]'s [[perTokenState]])
     * reuse them here instead of re-scanning the sink (r18, guide §2.4).
     */
   def hotSubjectsFromCounts(counts: DataFrame, dim: DataFrame, minRows: Long,
